@@ -77,7 +77,7 @@ object BenchExtra {
           "d4_sketch" -> (() => DedupOps.simhashSketch(DedupOps.withVariants(spark, sfDir))),
           // minhash pair list, cold (caches cleared first)
           "pairs_cold" -> (() => {
-            DedupOps.clearShingleCache()
+            DedupOps.clearMemos()
             DedupOps.minhashLshPairs(DedupOps.withVariants(spark, sfDir), 0.6)
           }),
           // CC over memoized pairs (pairs warm after pairs_cold)

@@ -198,61 +198,39 @@ object DedupOps {
         .BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
   }
 
-  /** The shingled corpus (doc_id, text, sh), persisted and memoized by the
-    * base plan's semantic hash: MinHash verification and the inverted
-    * index each consume it from several subtrees, and an unpersisted
-    * DataFrame subtree recomputes its whole lineage (scan + split +
-    * shingle) once per consumer. At 100 TB this is a staging table write;
-    * locally MEMORY_AND_DISK, bounded to the most recent few plans (older
-    * entries are unpersisted on eviction). Caveat: memoization keys on
-    * the PLAN, not the data — if the underlying files are overwritten
-    * in-place within one session, call [[clearShingleCache]] first.
+  /** The shingled corpus (doc_id, text, sh), persisted and memoized per
+    * base plan: MinHash verification and the inverted index each consume
+    * it from several subtrees, and an unpersisted DataFrame subtree
+    * recomputes its whole lineage (scan + split + shingle) once per
+    * consumer. At 100 TB this is a staging table write; locally
+    * MEMORY_AND_DISK (memo contract at [[Memo]]).
     */
-  private val MaxCachedShingleViews = 4
-  private val shingleCache =
-    new java.util.LinkedHashMap[(SparkSession, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedShingleViews
-        // unpersist may throw if the entry's session has since been stopped;
-        // never let a dead cache entry fail a live session's shingled() call
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
-    }
-
-  private def shingled(base: DataFrame): DataFrame = shingleCache.synchronized {
-    // drop entries whose session is gone so they don't pin stopped
-    // sessions/plans until LRU eviction reaches them
-    shingleCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash())
-    val cached = shingleCache.get(key)
-    if (cached != null) cached
-    else {
+  private def shingled(base: DataFrame): DataFrame =
+    shingleMemo.getOrElseUpdate(Memo.key(base)) {
       val spark = base.sparkSession
       import spark.implicits._
-      val df = base.select(col("doc_id"), col("text")).as[(Long, String)]
+      base.select(col("doc_id"), col("text")).as[(Long, String)]
         .mapPartitions(_.map { case (id, t) => (id, t, shingleSet(t)) })
         .toDF("doc_id", "text", "sh")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      shingleCache.put(key, df)
-      df
     }
-  }
 
-  def clearShingleCache(): Unit = {
-    shingleCache.synchronized {
-      shingleCache.values.forEach(df => scala.util.Try(df.unpersist()))
-      shingleCache.clear()
-    }
-    // stale shingles imply stale pairs and stale grams: anyone
-    // invalidating the text-derived views (files overwritten in place)
-    // must not keep any derived table
-    clearPairsCache()
-    clearGramCache()
-    clearEmbPairsCache()
-    clearPostingsCache()
-  }
+  private val shingleMemo = new Memo(_.unpersist())
+  private val gramMemo = new Memo(_.unpersist())
+  private val postingsMemo = new Memo(releaseRound)
+  private val pairsMemo = new Memo(_.unpersist())
+  private val lpCcMemo = new Memo(_.unpersist())
+  private val ccMemo = new Memo(_.unpersist())
+  private val embPairsMemo = new Memo(_.unpersist())
+
+  /** Drop every session memo of this object and release its storage —
+    * the one invalidation point (files overwritten in place, or tests
+    * that must start cold). Derived memos (pairs, labels) never outlive
+    * the views they were built from, because all go at once.
+    */
+  def clearMemos(): Unit =
+    Seq(shingleMemo, gramMemo, postingsMemo, pairsMemo, lpCcMemo, ccMemo, embPairsMemo)
+      .foreach(_.clear())
 
   // ---- shingle staging table (resumable; the 100 TB path) ----------------
 
@@ -492,47 +470,23 @@ object DedupOps {
 
   /** The corpus positional-gram table (doc_id, pos, g) with grams
     * exchanged as xxhash64 keys — one row-local scan, no HOFs. Memoized
-    * per session like [[shingled]]/the pairs memo: d12, d13 and p2 each
+    * per base plan and `k` like [[shingled]]: d12, d13 and p2 each
     * consume the SAME gram table (at 100 TB it is staged once via
     * [[stageSpanGrams]]; in-session the memo cuts two redundant
-    * tokenize+hash scans). Invalidated by [[clearShingleCache]] (grams
-    * are text-derived state, same staleness rules).
+    * tokenize+hash scans).
     */
-  private def posGrams(base: DataFrame, k: Int): DataFrame = gramCache.synchronized {
-    gramCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(), k)
-    val cached = gramCache.get(key)
-    if (cached != null) cached
-    else {
+  private def posGrams(base: DataFrame, k: Int): DataFrame =
+    gramMemo.getOrElseUpdate(Memo.key(base, k)) {
       val spark = base.sparkSession
       import spark.implicits._
-      val df = base.select(col("doc_id"), col("text")).as[(Long, String)]
+      base.select(col("doc_id"), col("text")).as[(Long, String)]
         .mapPartitions(_.flatMap { case (id, t) =>
           posGramsOf(t, k).map { case (i, g) => (id, i, g) }
         })
         .toDF("doc_id", "pos", "gram")
         .select(col("doc_id"), col("pos"), xxhash64(col("gram")).as("g"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      gramCache.put(key, df)
-      df
     }
-  }
-
-  private val MaxCachedGramViews = 4
-  private val gramCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedGramViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
-    }
-
-  private[graft] def clearGramCache(): Unit = gramCache.synchronized {
-    gramCache.values.forEach(df => scala.util.Try(df.unpersist()))
-    gramCache.clear()
-  }
 
   def spanDedup(base: DataFrame, k: Int = 13): DataFrame =
     spanDedupFrom(base, posGrams(base, k), k)
@@ -712,80 +666,47 @@ object DedupOps {
     spanDedupApplyFrom(base, stagedSpanGrams(base.sparkSession, dir, k), k)
 
   /** Exact n-gram Jaccard similarity join via shingle inverted index.
-    * Plan shape (one scan of the corpus, two shuffles): explode distinct
-    * shingles -> group by shingle into doc-id buckets -> expand each
-    * bucket's ordered pairs in place (bounded by `dfCap`) -> count
-    * co-occurrences per pair -> join per-doc set sizes (computed as a
-    * column expression, no second explode) -> Jaccard filter.
-    * Avoids the naive self-join, which would recompute and shuffle the
-    * exploded table twice. Returns (id_a, id_b, jaccard).
+    * Plan shape: the inverted index (xxhash64(shingle) -> sorted doc-id
+    * list) is read from the session postings memo — a row-format
+    * checkpoint, so d2's own plan scans it as an existing RDD and
+    * carries no explode or groupBy over shingle occurrences. Buckets
+    * over `dfCap` are dropped; each kept bucket's ordered pairs are
+    * expanded in place -> co-occurrences counted per pair (one shuffle)
+    * -> per-doc set sizes, read from the persisted shingle view, joined
+    * on both sides -> Jaccard filter. Avoids the naive self-join, which
+    * would recompute and shuffle the exploded table twice. Returns
+    * (id_a, id_b, jaccard).
     */
   def ngramJaccardPairs(base: DataFrame, threshold: Double,
                         dfCap: Int = DefaultShingleDfCap): DataFrame = {
-    // Fed from the postings memo SINCE the memo became a row-format
-    // localCheckpoint (round 7, measured three ways): against the
-    // original columnar persist() memo, reading the array-valued
-    // postings back out of cached column batches cost MORE than
-    // recomputing (steady ran slower than cold) and inline won; against
-    // the final localCheckpoint memo the interleaved same-JVM A/B
-    // (graft.AbD2Postings) reads memo ~1.35 s vs inline ~1.65 s median
-    // AND the inline path's transient 4-5 s GC-burst spikes (the
-    // explode+groupBy exchange) disappear entirely.
     val withSh = shingled(base).select(col("doc_id"), col("sh"))
     ngramJaccardPairsCore(withSh, postingsOf(withSh), threshold, dfCap)
   }
 
-  /** Session-scoped shingle-POSTINGS memo (round 7): the inverted index
-    * (xxhash64(shingle) -> sorted member list) is the shared expensive
-    * subplan of d2, d2b, d14 and d17 — each execution was re-running the
-    * explode + groupBy exchange over every shingle occurrence. The
-    * production analog is [[stageShingles]]: postings are derived once
-    * per corpus and every consumer reads them. Keyed on the shingled
-    * view's plan hash; persisted; cleared via [[clearShingleCache]].
-    * The `*Staged` paths BYPASS this memo on purpose — a re-staged
-    * directory must be re-read (the staging specs re-stage in-session).
-    * Consumers apply their own df-cap filters and `observe` metrics over
-    * the (vocabulary-sized) memoized table, so every op's observed
-    * metrics still fire on every execution.
+  /** Session shingle-POSTINGS memo: the inverted index is the shared
+    * expensive subplan of d2, d2b, d14 and d17 — without it each
+    * execution re-runs the explode + groupBy exchange over every shingle
+    * occurrence. The production analog is [[stageShingles]]: postings
+    * are derived once per corpus and every consumer reads them. The
+    * `*Staged` paths BYPASS this memo on purpose — a re-staged directory
+    * must be re-read (the staging specs re-stage in-session). Consumers
+    * apply their own df-cap filters and `observe` metrics over the
+    * (vocabulary-sized) memoized table, so every op's observed metrics
+    * still fire on every execution.
+    *
+    * Materialized as a LAZY localCheckpoint rather than persist():
+    * persist registers the plan fragment with the CacheManager, which
+    * substitutes the COLUMNAR cache into any structurally identical
+    * postings subplan, and deserializing the array-valued buckets out of
+    * cached column batches is slower than recomputing them. A checkpoint
+    * is a LogicalRDD (row format, never pattern-matched into other
+    * plans). Its storage is released with [[releaseRound]]
+    * (Dataset.unpersist does not release a localCheckpoint).
     */
-  private val postingsCache =
-    new java.util.LinkedHashMap[(SparkSession, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedShingleViews
-        if (evict) scala.util.Try(releaseRound(e.getValue))
-        evict
-      }
+  private def postingsOf(withSh: DataFrame): DataFrame =
+    postingsMemo.getOrElseUpdate(Memo.key(withSh)) {
+      rawPostings(withSh).localCheckpoint(false)
     }
-
-  def clearPostingsCache(): Unit = postingsCache.synchronized {
-    postingsCache.values.forEach(df => scala.util.Try(releaseRound(df)))
-    postingsCache.clear()
-  }
-
-  private def postingsOf(withSh: DataFrame): DataFrame = postingsCache.synchronized {
-    postingsCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (withSh.sparkSession, withSh.queryExecution.analyzed.semanticHash())
-    val cached = postingsCache.get(key)
-    if (cached != null) cached
-    else {
-      // materialized as a LAZY localCheckpoint rather than persist()
-      // (round 7): persist registers the plan fragment with the
-      // CacheManager, which then silently substituted the COLUMNAR
-      // cache into d2/d2b's structurally identical inline postings
-      // subplans — and deserializing the array-valued buckets out of
-      // cached column batches made their pair expansion ~2x slower
-      // than recomputing. A checkpoint is a LogicalRDD (row format,
-      // never pattern-matched into other plans): row reads are fast
-      // enough that d2/d2b now feed from here too (AbD2Postings
-      // evidence at [[ngramJaccardPairs]]). Storage released via
-      // releaseRound on eviction/clear (Dataset.unpersist does not
-      // release a localCheckpoint).
-      val df = rawPostings(withSh).localCheckpoint(false)
-      postingsCache.put(key, df)
-      df
-    }
-  }
 
   /** The inverted index itself: every bucket kept (consumers filter),
     * members sorted for deterministic in-row pair expansion. The
@@ -793,7 +714,7 @@ object DedupOps {
     * instead of ~20-char trigrams (collision odds documented at
     * [[ngramJaccardPairsCore]]).
     */
-  private def rawPostings(withSh: DataFrame): DataFrame =
+  private[graft] def rawPostings(withSh: DataFrame): DataFrame =
     withSh.select(col("doc_id"), explode(col("sh")).as("sh"))
       .select(col("doc_id"), xxhash64(col("sh")).as("sh"))
       .groupBy("sh").agg(sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -846,25 +767,6 @@ object DedupOps {
       .select(col("n_shingles"), col("max_df"), col("n_singleton"),
         col("n_pairable"), col("n_capped"),
         expr("pw2 div 2").as("pair_work"))
-  }
-
-  /** ROUND-7 A/B ONLY (not a declared query path): d2 fed from INLINE
-    * postings — the pre-switch form, kept so [[graft.AbD2Postings]] can
-    * re-run the inline-vs-memo comparison that justified feeding the
-    * declared d2/d2b from the localCheckpoint postings memo.
-    */
-  def ngramJaccardPairsInlineAb(base: DataFrame, threshold: Double,
-                                dfCap: Int = DefaultShingleDfCap): DataFrame = {
-    val withSh = shingled(base).select(col("doc_id"), col("sh"))
-    ngramJaccardPairsCore(withSh, rawPostings(withSh), threshold, dfCap)
-  }
-
-  /** ROUND-7 A/B ONLY: d2b fed from inline postings (see above). */
-  def ngramJaccardPairsCappedInlineAb(base: DataFrame, threshold: Double,
-                                      memberCap: Int = DefaultPairMemberCap,
-                                      dfCap: Int = DefaultShingleDfCap): DataFrame = {
-    val withSh = shingled(base).select(col("doc_id"), col("sh"))
-    ngramJaccardPairsCappedCore(withSh, rawPostings(withSh), threshold, memberCap, dfCap)
   }
 
   /** d2 over a pre-staged shingle table (see [[stageShingles]]): the
@@ -934,7 +836,7 @@ object DedupOps {
   def ngramJaccardPairsCapped(base: DataFrame, threshold: Double,
                               memberCap: Int = DefaultPairMemberCap,
                               dfCap: Int = DefaultShingleDfCap): DataFrame = {
-    // postings memo, same evidence as [[ngramJaccardPairs]]
+    // inverted index from the postings memo, as in [[ngramJaccardPairs]]
     val withSh = shingled(base).select(col("doc_id"), col("sh"))
     ngramJaccardPairsCappedCore(withSh, postingsOf(withSh), threshold, memberCap, dfCap)
   }
@@ -1107,59 +1009,21 @@ object DedupOps {
     * the observed metric `dropped_band_buckets` (0 means the result is
     * exact); pass `bucketCap = Int.MaxValue` to restore exact recall at
     * the cost of O(n^2) expansion inside giant buckets.
+    *
+    * Memoized per session on (base plan, threshold, bucketCap) and
+    * persisted: d6, d8, d9, d10 and p1 each consume the SAME pair list —
+    * at 100 TB it is computed once and every dedup-apply / clustering
+    * consumer reads it. The `dropped_band_buckets` observed metric fires
+    * on the FIRST materialization only (memo reads do not re-run the
+    * banding stage).
     */
   def minhashLshPairs(base: DataFrame, threshold: Double,
-                      bucketCap: Int = DefaultLshBucketCap): DataFrame = pairsCache.synchronized {
-    pairsCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(),
-      threshold, bucketCap)
-    val cached = pairsCache.get(key)
-    if (cached != null) cached
-    else {
-      // the shingled() memo already avoids re-shingling; this one avoids
-      // re-running signatures + banding + verification per consumer
-      val df = minhashLshPairsFromShingled(
+                      bucketCap: Int = DefaultLshBucketCap): DataFrame =
+    pairsMemo.getOrElseUpdate(Memo.key(base, threshold, bucketCap)) {
+      minhashLshPairsFromShingled(
         shingled(base).select(col("doc_id"), col("sh")), threshold, bucketCap)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairsCache.put(key, df)
-      df
     }
-  }
-
-  /** Session-scoped near-dup pair memo (the e3-codebook / shingled()
-    * pattern): d6, d8, d9, d10 and p1 each consume the SAME
-    * (base, threshold, cap) pair list — at 100 TB the pair list is
-    * computed once and every dedup-apply / clustering consumer reads it;
-    * locally the memo cuts four redundant signature+banding+verify
-    * passes from the iterative bench tail. Keyed on the base plan's
-    * ANALYZED semantic hash + (threshold, bucketCap); bounded LRU, the
-    * persisted result is unpersisted on eviction. Caveat (same as
-    * [[shingled]]): keys on the PLAN, not the data — if the underlying
-    * files are overwritten in place within one session, call
-    * [[clearPairsCache]] first. The `dropped_band_buckets` observed
-    * metric fires on the FIRST materialization only (cache reads do not
-    * re-run the banding stage).
-    */
-  private val MaxCachedPairViews = 4
-  private val pairsCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Double, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Double, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedPairViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
-    }
-
-  def clearPairsCache(): Unit = {
-    pairsCache.synchronized {
-      pairsCache.values.forEach(df => scala.util.Try(df.unpersist()))
-      pairsCache.clear()
-    }
-    // stale pairs imply stale cluster assignments
-    clearCcCache()
-    clearLpCcCache()
-  }
 
   /** d3 over a pre-staged shingle table (see [[stageShingles]]). */
   def minhashLshPairsStaged(spark: SparkSession, dir: String, threshold: Double,
@@ -1235,25 +1099,6 @@ object DedupOps {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Connected-component cluster ids over a near-dup pair list: every
-    * document gets the MIN doc_id of its duplicate component (the
-    * scale-correct dedup-apply primitive — dropping `id_b` of each pair,
-    * as d6 does, over-deletes on chains A~B~C). Iterative min-label
-    * propagation; each round is one shuffle join; convergence is an exact
-    * count of labels that changed this round (robust to negative doc_ids
-    * and to Long-overflow aliasing that a label-sum test would miss;
-    * O(component diameter) rounds; near-dup components are shallow — for
-    * web-graph-diameter inputs use [[clusterIdsStar]]).
-    * Returns (doc_id, cluster_id), persisted (MEMORY_AND_DISK) — callers
-    * that are done with the result should `.unpersist()` it.
-    *
-    * Each round's labels are materialized with lineage truncation
-    * (localCheckpoint): the round references the previous labels twice,
-    * so carrying the logical plan across rounds would double it per
-    * round — persist caches DATA but Catalyst still walks (and logs) the
-    * full accumulated plan, which is exponential in rounds and falls
-    * over around depth ~30 even though every round's data is tiny.
-    */
   /** Release the storage behind a round materialized with
     * `localCheckpoint(true)` — the checkpointed RDD's blocks otherwise
     * live until the driver GCs the dereferenced Dataset, so an iterative
@@ -1267,38 +1112,31 @@ object DedupOps {
       case _ => ()
     }
 
-  /** Session memo for [[clusterIds]] — the label-propagation sibling of
-    * the star-CC memo (round 7), kept as a SEPARATE cache so the two
-    * algorithms never serve each other's results (their outputs are
-    * equal at fixpoint, but each is benchmarked and spec'd as itself).
+  /** Connected-component cluster ids over a near-dup pair list: every
+    * document gets the MIN doc_id of its duplicate component (the
+    * scale-correct dedup-apply primitive — dropping `id_b` of each pair,
+    * as d6 does, over-deletes on chains A~B~C). Iterative min-label
+    * propagation; each round is one shuffle join; convergence is an exact
+    * count of labels that changed this round (robust to negative doc_ids
+    * and to Long-overflow aliasing that a label-sum test would miss;
+    * O(component diameter) rounds; near-dup components are shallow — for
+    * web-graph-diameter inputs use [[clusterIdsStar]]).
+    * Returns (doc_id, cluster_id), persisted (MEMORY_AND_DISK) and
+    * memoized per session on (base plan, pairs plan) — in a memo of its
+    * own, so the two CC algorithms never serve each other's results
+    * (equal at fixpoint, but each is benchmarked and spec'd as itself).
+    *
+    * Each round's labels are materialized with lineage truncation
+    * (localCheckpoint): the round references the previous labels twice,
+    * so carrying the logical plan across rounds would double it per
+    * round — persist caches DATA but Catalyst still walks (and logs) the
+    * full accumulated plan, which is exponential in rounds and falls
+    * over around depth ~30 even though every round's data is tiny.
     */
-  private val lpCcCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedCcViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
+  def clusterIds(base: DataFrame, pairs: DataFrame): DataFrame =
+    lpCcMemo.getOrElseUpdate(Memo.key(base, Memo.plan(pairs))) {
+      clusterIdsUncached(base, pairs)
     }
-
-  def clearLpCcCache(): Unit = lpCcCache.synchronized {
-    lpCcCache.values.forEach(df => scala.util.Try(df.unpersist()))
-    lpCcCache.clear()
-  }
-
-  def clusterIds(base: DataFrame, pairs: DataFrame): DataFrame = lpCcCache.synchronized {
-    lpCcCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(),
-      pairs.queryExecution.analyzed.semanticHash())
-    val cached = lpCcCache.get(key)
-    if (cached != null) cached
-    else {
-      val df = clusterIdsUncached(base, pairs)
-      lpCcCache.put(key, df)
-      df
-    }
-  }
 
   private def clusterIdsUncached(base: DataFrame, pairs: DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1333,12 +1171,20 @@ object DedupOps {
     out
   }
 
+  /** Rounds the last [[clusterIdsStar]] call took to converge (test
+    * evidence for the O(log n) bound; not thread-safe, diagnostics only).
+    */
+  private[graft] var lastStarRounds = 0
+
   /** Connected components in O(log n) rounds regardless of component
     * diameter: alternating large-star/small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", 2014) — the scale
     * path [[clusterIds]]'s doc points at for deep graphs. Same contract:
-    * (doc_id, cluster_id = component min), persisted; callers release
-    * with `.unpersist()`.
+    * (doc_id, cluster_id = component min), persisted and memoized per
+    * session on (base plan, pairs plan): d9, d10 and p1 all run the
+    * IDENTICAL clusterIdsStar(withVariants, pairs) computation — at
+    * 100 TB the cluster-assignment table is computed once per corpus and
+    * every apply/curate/audit consumer reads it.
     *
     * Scale notes: both star operations are expressed as join + min-agg —
     * no collect_set, so a giant star never materializes one row with a
@@ -1353,50 +1199,10 @@ object DedupOps {
     * cluster with executor churn, set a checkpoint dir and swap in
     * `checkpoint()` for fault-tolerant truncation.
     */
-  /** Rounds the last [[clusterIdsStar]] call took to converge (test
-    * evidence for the O(log n) bound; not thread-safe, diagnostics only).
-    */
-  private[graft] var lastStarRounds = 0
-
-  /** Session-scoped star-CC memo (round 7; the judge-mandated
-    * [[minhashLshPairs]] pattern extended to its main consumer): d9, d10
-    * and p1 all run the IDENTICAL clusterIdsStar(withVariants, pairs)
-    * computation — at 100 TB the cluster-assignment table is computed
-    * once per corpus and every apply/curate/audit consumer reads it.
-    * Keyed on (session, base plan hash, pairs plan hash); bounded LRU;
-    * evicted entries are unpersisted. Cascades from [[clearPairsCache]]
-    * (stale pairs imply stale clusters). Caveat (same as the pairs memo):
-    * keys on the PLAN, not the data — overwriting files in place within
-    * a session requires [[clearShingleCache]] first.
-    */
-  private val MaxCachedCcViews = 4
-  private val ccCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedCcViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
+  def clusterIdsStar(base: DataFrame, pairs: DataFrame): DataFrame =
+    ccMemo.getOrElseUpdate(Memo.key(base, Memo.plan(pairs))) {
+      clusterIdsStarUncached(base, pairs)
     }
-
-  def clearCcCache(): Unit = ccCache.synchronized {
-    ccCache.values.forEach(df => scala.util.Try(df.unpersist()))
-    ccCache.clear()
-  }
-
-  def clusterIdsStar(base: DataFrame, pairs: DataFrame): DataFrame = ccCache.synchronized {
-    ccCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(),
-      pairs.queryExecution.analyzed.semanticHash())
-    val cached = ccCache.get(key)
-    if (cached != null) cached
-    else {
-      val df = clusterIdsStarUncached(base, pairs)
-      ccCache.put(key, df)
-      df
-    }
-  }
 
   private def clusterIdsStarUncached(base: DataFrame, pairs: DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1503,44 +1309,6 @@ object DedupOps {
     code
   }
 
-  /** Embedding-cosine near-dup pairs: sign-projection blocking (one
-    * 24-bit code per vector -> bucket) -> in-row ordered pair expansion
-    * (the inverted-index shape, no all-pairs join) -> exact cosine verify
-    * in double precision (sequential fold, DuckDB-bit-compatible).
-    * Blocking recall is exactly 1.0 for same-direction duplicates; for
-    * fuzzy angular thresholds use multi-table probing as in
-    * [[SimOps.annTopK]]. Returns (id_a, id_b, cos >= threshold).
-    *
-    * `bucketCap` bounds the in-row pair expansion: a web-scale corpus has
-    * million-member duplicate clusters (and degenerate all-zero vectors
-    * share code 0), whose O(n^2) pair lists are useless — dedup-apply
-    * wants cluster representatives, not every edge. Oversized buckets are
-    * dropped and surfaced via the observed metric "dropped_buckets".
-    */
-  /** Session-scoped memo for [[embCosineDupPairs]] (round 7): e4 and p3
-    * both consume the embedding pair list, and — unlike the relational
-    * pair plans — an embCosine plan contains typed-closure nodes whose
-    * semantic hash is NOT stable across invocations, so the downstream
-    * CC memo could never hit through a fresh pairs plan. Keyed on the
-    * BASE plan's hash + (threshold, bucketCap), exactly like
-    * [[minhashLshPairs]]; returning the SAME DataFrame object also makes
-    * the consumer-side plan hashes stable.
-    */
-  private val embPairsCache =
-    new java.util.LinkedHashMap[(SparkSession, Int, Double, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Int, Double, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxCachedPairViews
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
-    }
-
-  def clearEmbPairsCache(): Unit = embPairsCache.synchronized {
-    embPairsCache.values.forEach(df => scala.util.Try(df.unpersist()))
-    embPairsCache.clear()
-  }
-
   /** Sequential three-accumulator cosine in double precision — the SAME
     * operation order as [[SimOps.cosine]]'s per-accumulator folds
     * (acc + x(i).toDouble * y(i).toDouble, ascending i), so the result
@@ -1562,20 +1330,33 @@ object DedupOps {
     ab / (math.sqrt(aa) * math.sqrt(bb))
   }
 
+  /** Embedding-cosine near-dup pairs: sign-projection blocking (one
+    * 24-bit code per vector -> bucket) -> in-row ordered pair expansion
+    * (the inverted-index shape, no all-pairs join) -> exact cosine verify
+    * in double precision (sequential fold, DuckDB-bit-compatible).
+    * Blocking recall is exactly 1.0 for same-direction duplicates; for
+    * fuzzy angular thresholds use multi-table probing as in
+    * [[SimOps.annTopK]]. Returns (id_a, id_b, cos >= threshold).
+    *
+    * `bucketCap` bounds the in-row pair expansion: a web-scale corpus has
+    * million-member duplicate clusters (and degenerate all-zero vectors
+    * share code 0), whose O(n^2) pair lists are useless — dedup-apply
+    * wants cluster representatives, not every edge. Oversized buckets are
+    * dropped and surfaced via the observed metric "dropped_buckets".
+    *
+    * Memoized per session on (base plan, threshold, bucketCap) and
+    * persisted, like [[minhashLshPairs]]: e4 and p3 both consume the
+    * pair list, and this plan contains typed-closure nodes that compare
+    * unequal across invocations, so the downstream CC memo could never
+    * hit through a freshly built pairs plan. Returning the SAME DataFrame
+    * object keeps the consumer-side plans equal.
+    */
   def embCosineDupPairs(base: DataFrame, threshold: Double,
-                        bucketCap: Int = 2000): DataFrame = embPairsCache.synchronized {
-    embPairsCache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-    val key = (base.sparkSession, base.queryExecution.analyzed.semanticHash(),
-      threshold, bucketCap)
-    val cached = embPairsCache.get(key)
-    if (cached != null) cached
-    else {
-      val df = embCosineDupPairsUncached(base, threshold, bucketCap)
+                        bucketCap: Int = 2000): DataFrame =
+    embPairsMemo.getOrElseUpdate(Memo.key(base, threshold, bucketCap)) {
+      embCosineDupPairsUncached(base, threshold, bucketCap)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      embPairsCache.put(key, df)
-      df
     }
-  }
 
   private def embCosineDupPairsUncached(base: DataFrame, threshold: Double,
                                         bucketCap: Int): DataFrame = {

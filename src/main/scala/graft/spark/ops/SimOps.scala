@@ -373,15 +373,16 @@ object SimOps {
   // single-threaded driver k-means per invocation made e3 the
   // second-most driver-contention-sensitive query in the round-4 bench
   // (14.4 s contended vs 1.4 s quiet). Keyed on the embedding table's
-  // ANALYZED plan semantic hash + (k, sampleN): same source => same
-  // deterministic sample => same codebook.
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Array[Array[Float]]]()
+  // canonicalized analyzed plan (compared structurally, see [[Memo]]) +
+  // (k, sampleN): same source => same deterministic sample => same
+  // codebook.
+  private val codebookCache = new java.util.concurrent.ConcurrentHashMap[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int), Array[Array[Float]]]()
 
   /** [[trainIvfCentroids]] with a per-JVM memo (see cache note above). */
   def trainIvfCentroidsCached(emb: DataFrame, k: Int, iters: Int = 8,
                               sampleN: Int = 2048): Array[Array[Float]] = {
-    val key = (emb.queryExecution.analyzed.semanticHash(), k, sampleN)
+    val key = (Memo.plan(emb), k, sampleN)
     codebookCache.computeIfAbsent(key, _ => trainIvfCentroids(emb, k, iters, sampleN))
   }
 

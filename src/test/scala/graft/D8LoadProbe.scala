@@ -72,7 +72,7 @@ object D8LoadProbe {
     val memoQuiet = bestOf(reps)(runD8())
     val memoLoaded = withLoad(bestOf(reps)(runD8()))
 
-    def unmemo(): Long = { DedupOps.clearShingleCache(); runD8() }
+    def unmemo(): Long = { DedupOps.clearMemos(); runD8() }
     unmemo() // warm the unmemoized path once
     val rawQuiet = bestOf(reps)(unmemo())
     val rawLoaded = withLoad(bestOf(reps)(unmemo()))

@@ -45,7 +45,7 @@ object DedupScaleProbe {
       val rows = f
       println(f"[probe] $name%-16s rows=$rows%9d wall=${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     println(s"[probe] corpus docs=$n (rep=$rep)")
     if (which("d2")) time("d2_ngram")(DedupOps.ngramJaccardPairs(base, 0.6).count())
     if (which("d2b")) time("d2b_capped")(DedupOps.ngramJaccardPairsCapped(base, 0.6).count())
@@ -66,7 +66,7 @@ object DedupScaleProbe {
       val out = DedupOps.clusterIdsStar(base, DedupOps.minhashLshPairs(base, 0.6))
       val c = out.count(); out.unpersist(); c
     }
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     spark.stop()
   }
 }

@@ -98,18 +98,26 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"), p)
     // the inverted index comes from the row-format postings memo (a
     // localCheckpoint LogicalRDD), so d2's own plan carries NO
-    // explode+groupBy over shingle occurrences per execution (round 7:
-    // the inline exchange was both slower at median and the source of
-    // transient GC-burst spikes — see AbD2Postings)
+    // explode+groupBy over shingle occurrences per execution
     assert(p.contains("Scan ExistingRDD"), p)
-    assert(!p.contains("explode"), p)
+    // (nor does the cached shingle view it reads, whose physical plan
+    // is checked too)
+    val optimized = df.queryExecution.optimizedPlan
+    val generators = optimized.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+    } ++ optimized.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cachedPlan
+    }.flatMap(_.collect { case g: org.apache.spark.sql.execution.GenerateExec => g })
+    assert(generators.isEmpty, generators.mkString("\n"))
     // the exchange-payload optimization (shuffle keys on the 64-bit
     // shingle hash, not the trigram string) lives in the postings
-    // lineage — assert it on the inline form, which shares rawPostings
-    val pInline = graft.spark.ops.DedupOps
-      .ngramJaccardPairsInlineAb(graft.spark.ops.DedupOps.withVariants(spark, sf), 0.6)
-      .queryExecution.executedPlan.toString
-    assert(pInline.contains("xxhash64"), pInline)
+    // lineage the memo checkpoints
+    val ops = graft.spark.ops.DedupOps
+    val withSh = ops.withVariants(spark, sf)
+      .select(org.apache.spark.sql.functions.col("doc_id"),
+        ops.shingles(org.apache.spark.sql.functions.col("text")).as("sh"))
+    val pPostings = ops.rawPostings(withSh).queryExecution.executedPlan.toString
+    assert(pPostings.contains("xxhash64"), pPostings)
   }
 
   test("bucketed tables co-locate the fact join: no shuffle on the join keys") {

@@ -14,8 +14,9 @@ import graft.spark.ops.{DedupOps, Par, SimOps}
   *  - Par.spreadBy: raises a below-parallelism scan to the cluster
   *    floor, and is an exact no-op (same object) at/above it.
   *  - session memos (star CC, label-propagation CC, embedding pairs):
-  *    semantically identical inputs share ONE computation; the clear
-  *    hooks cascade so stale derived views can never be served.
+  *    semantically identical inputs share ONE computation; inputs whose
+  *    plan hashes merely collide never share an entry; an evicted entry
+  *    is rebuilt; one clear drops every memo.
   */
 class Round7OptSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -74,7 +75,7 @@ class Round7OptSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("CC + embedding-pair memos: one computation per semantic input, clear cascades") {
     val sp = spark
     import sp.implicits._
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     def base = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
     def pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val first = DedupOps.clusterIdsStar(base, pairs)
@@ -89,10 +90,11 @@ class Round7OptSpec extends AnyFunSuite with BeforeAndAfterAll {
       first.orderBy("doc_id").collect().map(_.getLong(1)).toSeq)
     assert(first.orderBy("doc_id").collect().map(_.getLong(1)).toSeq ==
       Seq(1L, 1L, 1L, 4L))
-    // clearPairsCache cascades to BOTH CC memos (stale pairs => stale labels)
-    DedupOps.clearPairsCache()
+    // clearMemos drops BOTH CC memos (stale pairs => stale labels)
+    DedupOps.clearMemos()
     val recomputed = DedupOps.clusterIdsStar(base, pairs)
     assert(!(recomputed eq first))
+    assert(!(DedupOps.clusterIds(base, pairs) eq lp))
     // embedding-pair memo: keyed on the BASE plan, so a fresh call with
     // an equal plan reuses the pair list object
     val emb = Seq(
@@ -103,6 +105,45 @@ class Round7OptSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((1L, Array(1.0f, 0.0f)), (2L, Array(2.0f, 0.0f)),
         (3L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding"), 0.9) eq ep)
     assert(ep.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
-    DedupOps.clearShingleCache() // leave no state for other suites
+    DedupOps.clearMemos() // leave no state for other suites
+  }
+
+  private def docIds(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  test("memo keys compare plans, not 32-bit hashes: colliding bases keep their own results") {
+    DedupOps.clearMemos()
+    val sp = spark
+    import sp.implicits._
+    // two different ranges whose analyzed plans share a semanticHash; if
+    // a Spark upgrade moves the hashes, search Range(s, e, 1, Some(4))
+    // pairs for a new collision (varying s and e, ~200k tries suffice)
+    val a = spark.range(342, 1059, 1, 4).toDF("doc_id")
+    val b = spark.range(266, 1130, 1, 4).toDF("doc_id")
+    assert(a.queryExecution.analyzed.semanticHash() == b.queryExecution.analyzed.semanticHash(),
+      "the colliding pair no longer collides on this Spark version; re-search it")
+    assert(!a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed))
+    val pairs = Seq((400L, 401L)).toDF("id_a", "id_b")
+    assert(DedupOps.clusterIdsStar(a, pairs).count() == 717L)
+    assert(DedupOps.clusterIdsStar(b, pairs).count() == 864L)
+    assert(DedupOps.clusterIds(a, pairs).count() == 717L)
+    assert(DedupOps.clusterIds(b, pairs).count() == 864L)
+    DedupOps.clearMemos()
+  }
+
+  test("an evicted memo entry is rebuilt on the next call with the same rows") {
+    DedupOps.clearMemos()
+    val sp = spark
+    import sp.implicits._
+    def base(i: Int) = spark.range(0, 10 + i, 1, 2).toDF("doc_id")
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val first = DedupOps.clusterIdsStar(base(0), pairs)
+    val firstRows = docIds(first)
+    (1 to 4).foreach(i => DedupOps.clusterIdsStar(base(i), pairs).count())
+    // five distinct bases through a four-entry memo: the first is gone
+    val again = DedupOps.clusterIdsStar(base(0), pairs)
+    assert(!(again eq first))
+    assert(docIds(again) == firstRows)
+    DedupOps.clearMemos()
   }
 }

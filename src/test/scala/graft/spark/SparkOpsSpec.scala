@@ -97,7 +97,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect { case (w, i) if i % 17 != 16 => w }.mkString(" ")
     val base = ((0L until 1000L).map(id => (id, giantText)) ++
       Seq((5000L, near), (5001L, nearVariant))).toDF("doc_id", "text")
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     val out = DedupOps.minhashLshPairs(base, 0.6, bucketCap = 100)
     val rows = out.collect()
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((5000L, 5001L)),
@@ -105,7 +105,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the dropped giant buckets are observable, not silent
     val metrics = out.queryExecution.observedMetrics
     assert(metrics("lsh_band_buckets").getLong(0) == 32L, metrics.toString)
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
   }
 
   test("d2b: pair output bounded by the member cap on a giant duplicate cluster") {
@@ -119,7 +119,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect { case (w, i) if i % 17 != 16 => w }.mkString(" ")
     val base = ((0L until 1000L).map(id => (id, giantText)) ++
       Seq((5000L, near), (5001L, nearVariant))).toDF("doc_id", "text")
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     val out = DedupOps.ngramJaccardPairsCapped(base, 0.6, memberCap = 16)
     val rows = out.collect()
     val clusterPairs = rows.filter(_.getLong(0) < 1000L)
@@ -130,17 +130,17 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(metrics.getAs[Long]("capped_shingle_buckets") > 0L, metrics.toString)
     assert(metrics.getAs[Long]("dropped_shingles_capped") == 0L, metrics.toString)
     // below the cap, d2b degenerates to exact d2 (cluster removed)
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     val small = Seq((5000L, near), (5001L, nearVariant)).toDF("doc_id", "text")
     val exact = DedupOps.ngramJaccardPairs(small, 0.6).collect().toSet
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     val capped = DedupOps.ngramJaccardPairsCapped(small, 0.6, memberCap = 16).collect().toSet
     assert(capped == exact)
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
   }
 
   test("d3 pairs memo: d6/d8/d9/d10/p1's shared pair list is computed once per session") {
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     val p1 = DedupOps.minhashLshPairs(DedupOps.withVariants(spark, sf), 0.6)
     // a SECOND consumer building the same base plan gets the SAME persisted
     // instance — reference equality is the one-computation proof
@@ -151,12 +151,12 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p3 = DedupOps.minhashLshPairs(DedupOps.withVariants(spark, sf), 0.7)
     assert(!(p1 eq p3), "a different threshold is a different pair list")
     // shingle invalidation cascades: the memo must not survive a clear
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     assert(p1.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "clear must unpersist the evicted pair list")
     val p4 = DedupOps.minhashLshPairs(DedupOps.withVariants(spark, sf), 0.6)
     assert(!(p1 eq p4), "clear must drop the memo")
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
   }
 
   test("d14 incremental: variants match their originals, fresh docs clean, staged == in-memory") {
@@ -210,7 +210,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1000L, s"a0 b0 c0 d0 $boiler"), // exact copy of doc 0
       (1060L, Array.tabulate(12)(j => s"v$j").drop(1).mkString(" "))
     ).toDF("doc_id", "text")
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     val out = DedupOps.incrementalDupVerdict(corpus, batch, 0.6, dfCap = 10)
     val verdicts = out.collect()
       .map(r => r.getLong(0) -> (r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
@@ -219,7 +219,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(verdicts(1060L) == ((true, 60L)), verdicts.toString)
     val metrics = out.queryExecution.observedMetrics("incr_corpus_postings")
     assert(metrics.getAs[Long]("dropped_corpus_shingles") == 4L, metrics.toString)
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
   }
 
   test("d5 simhash: a giant chunk bucket is dropped (capped), true pairs elsewhere survive") {
@@ -1471,7 +1471,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ingest batches against the staged postings with no re-shingling
     val corpus = (0L until 50L).map(i => (i, s"c$i d$i e$i f$i g$i h$i " +
       "shared common boiler plate text here")).toDF("doc_id", "text")
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
     DedupOps.stageShingles(corpus, stageDir, buckets = 4)
     // batch: one exact re-crawl of doc 7, one novel doc
     Seq((1007L, "c7 d7 e7 f7 g7 h7 shared common boiler plate text here"),
@@ -1488,7 +1488,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // only the novel doc reaches the accepted corpus feed
     val accepted = spark.read.parquet(acceptedDir).select("doc_id").collect().map(_.getLong(0))
     assert(accepted.toSeq == Seq(2000L), accepted.mkString(","))
-    DedupOps.clearShingleCache()
+    DedupOps.clearMemos()
   }
 
   test("streaming decontamination equals the d15 bloom verdicts (file stream, map-only)") {
