@@ -847,7 +847,6 @@ final class Rewriter(
       if (epoch == Int.MaxValue) { // stamp wrap: clear once per 2^31 tags
         java.util.Arrays.fill(nameStamp, 0)
         java.util.Arrays.fill(valueStamp, 0)
-        bloomEpoch = -1
         epoch = 1
       }
     }
@@ -880,34 +879,6 @@ final class Rewriter(
     // byte-level probe: unmatched attributes never materialize a name
     override def attrNameEq(i: Int, lowerName: String): Boolean =
       HtmlUtil.eqIgnoreCase(in, attrsV.nameStart(i), attrsV.nameEnd(i), lowerName)
-
-    // per-tag attr-name first-letter mask (see ElemView.attrNameBloom):
-    // built lazily on the FIRST attr predicate of a tag, shared by every
-    // predicate on that tag — a clear bit answers `.class`/`#id`/`[attr]`
-    // in one AND instead of an attr-list scan. One byte load + OR per
-    // attribute; bit mapping matches ElemView.attrNameBit (letters →
-    // c-'a', anything else — incl. non-ASCII bytes — → bit 26, which is
-    // conservative because non-ASCII selector names never filter).
-    private var bloomV = 0L
-    private var bloomEpoch = -1
-    override def attrNameBloom: Long = {
-      if (bloomEpoch != epoch) {
-        var m = 0L
-        var i = 0
-        while (i < matCount) {
-          val ns = attrsV.nameStart(i)
-          if (ns < attrsV.nameEnd(i)) {
-            val b = in(ns) & 0xff
-            val c = if (b >= 'A' && b <= 'Z') b + 32 else b
-            m |= (if (c >= 'a' && c <= 'z') 1L << (c - 'a') else 1L << 26)
-          } else m |= 1L << 26
-          i += 1
-        }
-        bloomV = m
-        bloomEpoch = epoch
-      }
-      bloomV
-    }
 
     // byte-level .class / #id evaluation: the attribute VALUE string is
     // never materialized for the (overwhelmingly common) ASCII selector
@@ -950,9 +921,8 @@ final class Rewriter(
             return graft.selectors.ElemView.containsWsToken(attrValue(i), cls, caseInsensitive = false)
           // candidate scan on the FIRST selector byte instead of full
           // tokenization: a ws-boundary-checked match at p is exactly a
-          // token match (tokens are maximal ws-separated runs), and the
-          // common no-match case costs one byte compare per position
-          // instead of the per-byte whitespace classification
+          // token match (tokens are maximal ws-separated runs); memchr
+          // skips the no-match stretches a word at a time
           val e = attrsV.valueEnd(i)
           val s0 = attrsV.valueStart(i)
           val len = cls.length
@@ -960,28 +930,16 @@ final class Rewriter(
           val c0 = cls.charAt(0).toInt
           val last = e - len
           var p = s0
-          if (Rewriter.ClsProbeMemchr) {
-            while (p <= last) {
-              p = graft.core.Lexer.memchrRange(in, c0, p, last + 1)
-              if (p < 0) return false
-              if (p == s0 || isWsB(in(p - 1))) {
-                var k = 1
-                var ok = true
-                while (ok && k < len) { if ((in(p + k) & 0xff) != cls.charAt(k)) ok = false; k += 1 }
-                if (ok && (p + len == e || isWsB(in(p + len)))) return true
-              }
-              p += 1
+          while (p <= last) {
+            p = graft.core.Lexer.memchrRange(in, c0, p, last + 1)
+            if (p < 0) return false
+            if (p == s0 || isWsB(in(p - 1))) {
+              var k = 1
+              var ok = true
+              while (ok && k < len) { if ((in(p + k) & 0xff) != cls.charAt(k)) ok = false; k += 1 }
+              if (ok && (p + len == e || isWsB(in(p + len)))) return true
             }
-          } else {
-            while (p <= last) {
-              if ((in(p) & 0xff) == c0 && (p == s0 || isWsB(in(p - 1)))) {
-                var k = 1
-                var ok = true
-                while (ok && k < len) { if ((in(p + k) & 0xff) != cls.charAt(k)) ok = false; k += 1 }
-                if (ok && (p + len == e || isWsB(in(p + len)))) return true
-              }
-              p += 1
-            }
+            p += 1
           }
           return false
         }
@@ -1380,14 +1338,6 @@ object Rewriter {
     */
   private[rewrite] final val WsMask: Long =
     (1L << '\t') | (1L << '\n') | (1L << '\f') | (1L << '\r') | (1L << ' ')
-
-  /** A/B switch for the class-token candidate scan (SWAR memchr vs plain
-    * first-byte loop); toggled by the AbClsRatio harness so both
-    * variants run interleaved in one JVM. -Dgraft.clsProbe=loop selects
-    * the byte loop.
-    */
-  private[graft] var ClsProbeMemchr: Boolean =
-    !"loop".equals(System.getProperty("graft.clsProbe"))
 
   /** HTML-compatible encode (reference D13 output behavior —
     * encoding_rs's `encode_from_utf8` in

@@ -10,18 +10,6 @@ trait ElemView {
   def nameLower: String
   def nameHash: Long
   def isHtmlNs: Boolean
-  /** Presence bitmask over the FIRST LETTER of the element's attribute
-    * names (case-folded; bit `c - 'a'` for letters, bit 26 for any other
-    * first byte), or -1 ("unknown — treat every name as possibly
-    * present") when the implementation doesn't compute one. A CLEAR bit
-    * proves the attribute absent, letting `.class`, `#id` and `[attr]`
-    * predicates skip the attr-list scan entirely; a set bit still
-    * requires the exact scan (the mask only filters). First-letter
-    * beats a full-name FNV bloom here because building it is one byte
-    * load + OR per attribute — an FNV fold over every name byte cost
-    * more than the scans it saved (measured: on/off 0.91-0.95).
-    */
-  def attrNameBloom: Long = -1L
   def attrCount: Int
   def attrNameLower(i: Int): String
   def attrValue(i: Int): String
@@ -80,26 +68,6 @@ object ElemView {
   @inline private def isAttrWs(c: Char): Boolean =
     c == ' ' || c == '\n' || c == '\r' || c == '\t' || c == '\f'
 
-  /** Mask bit for a selector-side attribute name: the case-folded FIRST
-    * letter ('a'..'z' → bit 0..25), bit 26 for any other ASCII first
-    * char, -1 ("all bits" — never filter) for empty or non-ASCII names:
-    * their raw-byte identity depends on the input encoding, so the mask
-    * can't prove absence for them.
-    */
-  def attrNameBit(lowerName: String): Long = {
-    if (lowerName.isEmpty) return -1L
-    val ch = lowerName.charAt(0)
-    if (ch >= 0x80) return -1L
-    val c = if (ch >= 'A' && ch <= 'Z') ch + 32 else ch.toInt
-    if (c >= 'a' && c <= 'z') 1L << (c - 'a') else 1L << 26
-  }
-
-  /** Precomputed bloom bits for the two attribute names the `.class` and
-    * `#id` shorthands read.
-    */
-  val ClassBit: Long = attrNameBit("class")
-  val IdBit: Long = attrNameBit("id")
-
   /** Whitespace-separated token membership (shared by the default
     * [[ElemView.hasClassToken]] and the attribute ~= operator).
     */
@@ -148,22 +116,10 @@ final class Instr(
     case Array(a: AttrSel) if a.op == AttrOp.Exists => a.lowerName
     case _ => null
   }
-  private val soloAttrExistsBit: Long = simples match {
-    case Array(a: AttrSel) if a.op == AttrOp.Exists => a.nameBit
-    case _ => -1L
-  }
 
   def eval(e: ElemView): Boolean = {
-    // the solo fast paths must keep the bloom guard evalSimple applies —
-    // they ARE the hottest universal predicates (bare `.cls` / `[attr]`
-    // evaluate on every tag), so skipping the guard here silently turned
-    // the bloom off for exactly the shapes it was built for
-    if (soloClass != null)
-      return (!Instr.BloomGate || (e.attrNameBloom & ElemView.ClassBit) != 0L) &&
-        e.hasClassToken(soloClass)
-    if (soloAttrExists != null)
-      return (!Instr.BloomGate || (e.attrNameBloom & soloAttrExistsBit) != 0L) &&
-        e.attrExists(soloAttrExists)
+    if (soloClass != null) return e.hasClassToken(soloClass)
+    if (soloAttrExists != null) return e.attrExists(soloAttrExists)
     var i = 0
     while (i < simples.length) {
       if (!Instr.evalSimple(simples(i), e)) return false
@@ -174,36 +130,14 @@ final class Instr(
 }
 
 object Instr {
-  /** A/B switch for the attr-name mask guards (-Dgraft.attrBloom=on, or
-    * toggled directly by the AbBloomRatio harness so both variants run
-    * interleaved in ONE JVM — the only protocol that survives this
-    * host's contention windows). DEFAULT OFF: with the solo universal
-    * fast paths actually consulting the guard, both mask variants
-    * (full-name FNV bloom and first-letter bitmask) measured net
-    * NEGATIVE on the sel_mix workload (on/off 0.91-0.99 on
-    * cloudflare/ecma402) — the attr-name scans they'd skip already
-    * early-exit on the first byte, so the per-tag mask build is pure
-    * overhead. Kept behind the gate for attr-heavy compound selector
-    * sets where one mask serves many predicates.
-    */
-  private[graft] var BloomGate: Boolean =
-    "on".equals(System.getProperty("graft.attrBloom"))
-
   def evalSimple(s: SimpleSel, e: ElemView): Boolean = s match {
     case TypeSel(lower, hash) =>
       if (hash != TagHash.Empty || e.nameHash != TagHash.Empty) e.nameHash == hash
       else e.nameLower == lower
     case UniversalSel => true
-    // attr-name bloom guards: one bit test proves class/id/[attr] absent
-    // without scanning the attribute list (the view computes the bloom
-    // once per tag and shares it across every predicate). BloomGate is a
-    // JVM-constant A/B switch (-Dgraft.attrBloom=off); the JIT folds it.
-    case IdSel(id) =>
-      (!BloomGate || (e.attrNameBloom & ElemView.IdBit) != 0L) && e.idEquals(id)
-    case ClassSel(cls) =>
-      (!BloomGate || (e.attrNameBloom & ElemView.ClassBit) != 0L) && e.hasClassToken(cls)
-    case a: AttrSel =>
-      (!BloomGate || (e.attrNameBloom & a.nameBit) != 0L) && evalAttr(a, e)
+    case IdSel(id) => e.idEquals(id)
+    case ClassSel(cls) => e.hasClassToken(cls)
+    case a: AttrSel => evalAttr(a, e)
     case NotSel(inner) =>
       var i = 0
       while (i < inner.length) {

@@ -44,12 +44,7 @@ case class TypeSel(lowerName: String, hash: Long) extends SimpleSel
 case object UniversalSel extends SimpleSel
 case class IdSel(id: String) extends SimpleSel
 case class ClassSel(cls: String) extends SimpleSel
-case class AttrSel(lowerName: String, op: Int, value: String, caseMode: Int) extends SimpleSel {
-  /** Presence-bloom bit of the attr name (see [[ElemView.attrNameBit]]);
-    * -1 for non-ASCII names (never filters). Not part of equality.
-    */
-  val nameBit: Long = ElemView.attrNameBit(lowerName)
-}
+case class AttrSel(lowerName: String, op: Int, value: String, caseMode: Int) extends SimpleSel
 /** `:not(<compound list>)` — combinators inside negation are rejected,
   * as in /root/reference/src/selectors_vm/parser.rs:127-131.
   */

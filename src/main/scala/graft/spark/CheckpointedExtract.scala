@@ -163,7 +163,7 @@ object CheckpointedExtract {
               val v = m.computeIfAbsent(r._4, _ => new Array[Long](5))
               v(0) += 1 // docs
               r._2.foreach { s =>
-                if (s.kind == "text") { v(1) += 1; v(4) += ExtractPipeline.utf8Bytes(s.text) }
+                if (s.kind == "text") { v(1) += 1; v(4) += graft.core.Utf8.encodedLength(s.text) }
                 else v(2) += 1
               }
               if (r._3 != null) v(3) += 1

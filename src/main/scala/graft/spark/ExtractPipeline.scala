@@ -13,10 +13,6 @@ final case class InSpan(kind: String, text: String, media_ref: String, offset: I
 final case class InterleavedDoc(doc_id: String, spans: Seq[InSpan])
 final case class ExtractedDoc(doc_id: String, spans: Seq[InSpan], error: String)
 
-/** Per-partition extraction metrics for the run ledger. */
-final case class PartMetrics(partition: Int, docs: Long, bytes: Long,
-                             textSpans: Long, mediaSpans: Long, errors: Long)
-
 /** Deterministic synthetic interleaved-document generator, driven by the
   * provided `documents` parquet table (TESTDATA.md) so DuckDB oracles can
   * recompute expected extraction output with plain SQL:
@@ -131,24 +127,18 @@ object InterleavedGen {
   }
 }
 
-/** The Spark-side extraction pipeline: `mapPartitions` of the per-row
-  * engine over the interleaved table, with partition-level engine reuse,
-  * optional salting for balanced partitions, and per-partition metrics.
+/** The Spark-side extraction pipeline: the per-row engine as the
+  * [[ExtractInterleaved]] expression over the interleaved table (engines
+  * reused per task thread), plus byte-aware rebalancing for skewed input.
   *
   * Scale notes (100 TB design): the engine is row-local, so the plan has
   * NO shuffle — extraction runs map-only over the scan's file-split tasks
-  * and parallelism equals input splits. Salting (`balanced`) adds one
-  * round-robin shuffle for the rare case of pathological file-level skew;
-  * AQE handles post-shuffle coalescing. Per-doc memory is bounded by the
-  * document size; oversized docs should be length-capped upstream.
+  * and parallelism equals input splits. [[extractSizeBalanced]] adds one
+  * shuffle for the rare case of pathological file- or byte-level skew.
+  * Per-doc memory is bounded by the document size; oversized docs should
+  * be length-capped upstream.
   */
 object ExtractPipeline {
-
-  /** Ledger/metrics "bytes" are UTF-8 octets, not chars — single source
-    * of truth in [[graft.core.Utf8]] so metrics and the extractor's
-    * buffer sizing can never drift apart.
-    */
-  private[spark] def utf8Bytes(s: String): Long = graft.core.Utf8.encodedLength(s)
 
   /** DataFrame-level extraction: the engine runs as a Catalyst expression
     * directly over columnar data (no encoder round-trip). The `spans`
@@ -174,32 +164,6 @@ object ExtractPipeline {
               policy: ExtractPolicy = ExtractPolicy.Default): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
     extractDF(ds.toDF(), policy).as[ExtractedDoc]
-  }
-
-  /** Typed mapPartitions path (custom policies; same engine). */
-  def extractTyped(ds: Dataset[InterleavedDoc], policy: ExtractPolicy): Dataset[ExtractedDoc] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val ex = new Extractor(policy) // reused across rows (arena analog)
-      it.map { doc =>
-        val res = ex.extract(doc.spans.view.map(s =>
-          InFrag(s.kind == "text", s.text, s.media_ref)))
-        ExtractedDoc(doc.doc_id,
-          res.spans.map(s => InSpan(s.kind, s.text, s.media_ref, s.offset)),
-          res.error)
-      }
-    }
-  }
-
-  /** Salted repartition for skewed inputs: distributes rows uniformly by
-    * doc_id hash before extraction (one shuffle, then map-only). doc_id is
-    * high-cardinality, so hash partitioning is the salt. Balances row
-    * COUNTS; for byte-skewed corpora use [[extractSizeBalanced]].
-    */
-  def extractBalanced(ds: Dataset[InterleavedDoc], partitions: Int,
-                      policy: ExtractPolicy = ExtractPolicy.Default): Dataset[ExtractedDoc] = {
-    val salted = ds.repartition(partitions, col("doc_id"))
-    extract(salted.as[InterleavedDoc](ds.sparkSession.implicits.newProductEncoder), policy)
   }
 
   /** Byte-aware balanced extraction for size-skewed corpora (SURVEY §4
@@ -276,26 +240,5 @@ object ExtractPipeline {
       .repartition(numParts, col("_key"))
       .drop("_bytes", "_pid", "_key")
     extract(keyed.as[InterleavedDoc](spark.implicits.newProductEncoder), policy)
-  }
-
-  /** Extraction + per-partition metrics (the run-ledger payload). */
-  def extractWithMetrics(ds: Dataset[InterleavedDoc],
-                         policy: ExtractPolicy = ExtractPolicy.Default)
-      : (Dataset[ExtractedDoc], Dataset[PartMetrics]) = {
-    val out = extract(ds, policy)
-    import ds.sparkSession.implicits._
-    val metrics = out.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var docs = 0L; var bytes = 0L; var ts = 0L; var ms = 0L; var errs = 0L
-      it.foreach { d =>
-        docs += 1
-        d.spans.foreach { s =>
-          if (s.kind == "text") { ts += 1; bytes += utf8Bytes(s.text) } else ms += 1
-        }
-        if (d.error != null) errs += 1
-      }
-      Iterator.single(PartMetrics(pid, docs, bytes, ts, ms, errs))
-    }
-    (out, metrics)
   }
 }

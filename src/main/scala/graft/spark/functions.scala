@@ -2,45 +2,22 @@ package graft.spark
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{CreateArray, CreateNamedStruct, Expression,
+  GetStructField, If, IsNull, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.extract.{ExtractPolicy, Extractor}
 
-/** `extract_spans(html)` — the engine as a Catalyst expression, the SQL
-  * analog of the reference's one-off `rewrite_str`
-  * (/root/reference/src/rewriter/mod.rs:307-340). Returns the ordered
-  * span array `array<struct<kind,text,media_ref,offset>>` for a whole
-  * HTML document string.
-  *
-  * CodegenFallback: the per-row engine is a black box to codegen; the
-  * expression still participates in column pruning / filter pushdown and
-  * keeps the surrounding plan whole-stage-compiled. Engine instances are
-  * thread-local (reused across rows within a task).
+/** The SQL surface of the engine. `extract_spans(html)` is the SQL analog
+  * of lol-html's one-off `rewrite_str` (`src/rewriter/mod.rs:307-340`),
+  * and like it a thin wrapper over the one pipeline: the whole HTML
+  * document string becomes a single text fragment for
+  * [[ExtractInterleaved]], and the result is that expression's ordered
+  * span array `array<struct<kind,text,media_ref,offset>>` (the
+  * per-document error is dropped). A NULL document gives NULL.
   */
-case class ExtractSpans(child: Expression)
-    extends UnaryExpression with CodegenFallback with Serializable {
-
-  override def dataType: DataType = ExtractSpans.SpanArrayType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val html = input.asInstanceOf[UTF8String].getBytes
-    val res = ExtractSpans.engine.get().extractHtml(html, Vector.empty, Vector.empty)
-    new GenericArrayData(res.spans.map { s =>
-      InternalRow(UTF8String.fromString(s.kind), UTF8String.fromString(s.text),
-        UTF8String.fromString(s.media_ref), s.offset)
-    }.toArray[Any])
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "extract_spans"
-}
-
 object ExtractSpans {
   val SpanType: StructType = StructType(Seq(
     StructField("kind", StringType, nullable = false),
@@ -49,13 +26,22 @@ object ExtractSpans {
     StructField("offset", IntegerType, nullable = false)))
   val SpanArrayType: DataType = ArrayType(SpanType, containsNull = false)
 
-  private[spark] val engine: ThreadLocal[Extractor] =
-    ThreadLocal.withInitial(() => new Extractor(ExtractPolicy.Default))
+  private def build(html: Expression): Expression =
+    If(IsNull(html), Literal(null, SpanArrayType),
+      GetStructField(ExtractInterleaved(CreateArray(Seq(CreateNamedStruct(Seq(
+        Literal("kind"), Literal("text"), Literal("text"), html,
+        Literal("media_ref"), Literal("")))))), 0))
 
-  /** Register `extract_spans` for SQL and the Column surface. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "extract_spans", exprs => ExtractSpans(exprs.head), "scala_udf")
+  /** Register `extract_spans` and `extract_interleaved` for SQL and the
+    * Column surface.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.createOrReplaceTempFunction(
+      "extract_interleaved", exprs => ExtractInterleaved(exprs.head), "scala_udf")
+    registry.createOrReplaceTempFunction(
+      "extract_spans", exprs => build(exprs.head), "scala_udf")
+  }
 
   /** Column surface (requires [[register]] once per session). */
   def extract_spans(html: Column): Column =
@@ -205,10 +191,6 @@ object ExtractInterleaved {
   private[spark] val MEDIA = UTF8String.fromString("media")
   @inline private[spark] def isText(kind: UTF8String): Boolean =
     kind != null && kind.equals(TEXT)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "extract_interleaved", exprs => ExtractInterleaved(exprs.head), "scala_udf")
 }
 
 /** Row-local rolling polynomial fingerprint (base 131 mod 1e9+7) as a

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.spark._
-import graft.extract.ExtractPolicy
 
 /** Structured Streaming surface of the extraction pipeline: document
   * micro-batches in, extracted span rows out — the Spark-native analog of
@@ -13,8 +12,8 @@ import graft.extract.ExtractPolicy
   * granularity (whole documents arrive per row; the engine streams
   * internally).
   *
-  * The transformation is the SAME typed code as the batch path
-  * (ExtractPipeline.extract) — one engine, two execution modes.
+  * The transformation is the SAME expression as the batch path
+  * (ExtractPipeline.extractDF) — one engine, two execution modes.
   */
 object StreamingExtract {
 
@@ -26,21 +25,13 @@ object StreamingExtract {
       StructField("media_ref", StringType),
       StructField("offset", IntegerType)))))))
 
-  /** Extraction over any streaming DataFrame with the interleaved schema. */
-  def extractStream(docs: DataFrame,
-                    policy: ExtractPolicy = ExtractPolicy.Default): Dataset[ExtractedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    ExtractPipeline.extract(docs.as[InterleavedDoc], policy)
-  }
-
   /** File-source streaming job: watch `inDir` for parquet document
     * batches, extract, append to `outDir`, with per-batch metrics.
     */
   def run(spark: SparkSession, inDir: String, outDir: String,
           checkpointDir: String): StreamingQuery = {
     val in = spark.readStream.schema(inputSchema).parquet(inDir)
-    extractStream(in).toDF()
+    ExtractPipeline.extractDF(in)
       .writeStream
       .format("parquet")
       .option("path", outDir)

@@ -48,8 +48,9 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("extract metrics cover all docs") {
-    val (_, metrics) = ExtractPipeline.extractWithMetrics(InterleavedGen.table(spark, sf))
-    val m = metrics.collect()
+    // the run ledger's metrics: per-bucket tallies of the write job
+    val dir = java.nio.file.Files.createTempDirectory("graft_metrics").toString
+    val m = CheckpointedExtract.run(InterleavedGen.table(spark, sf), dir, buckets = 4)
     assert(m.map(_.docs).sum == 500)
     assert(m.map(_.errors).sum == 0)
     assert(m.map(_.textSpans).sum > 500)
@@ -1319,6 +1320,35 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.createOrReplaceTempView("docs_html")
     val viaSql = spark.sql("select size(extract_spans(html)) n from docs_html").collect()
     assert(viaSql(0).getInt(0) == 2)
+    // per document, the text of extract_spans over the concatenated text
+    // fragments equals the text of the pipeline over the fragments
+    val textOf = (spans: org.apache.spark.sql.Column) =>
+      array_join(transform(filter(spans, s => s.getField("kind") === "text"),
+        s => s.getField("text")), "")
+    val table = InterleavedGen.table(spark, sf)
+    val viaFn = table.toDF()
+      .select(col("doc_id"), textOf(ExtractSpans.extract_spans(textOf(col("spans")))))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val viaPipeline = ExtractPipeline.extract(table).collect()
+      .map(d => d.doc_id -> d.spans.filter(_.kind == "text").map(_.text).mkString).toMap
+    assert(viaFn.size == 500)
+    assert(viaFn == viaPipeline)
+    // and span for span what the engine gives for the whole document
+    val engine = new graft.extract.Extractor(graft.extract.ExtractPolicy.Default)
+    table.toDF().select(textOf(col("spans")).as("html"))
+      .select(col("html"), ExtractSpans.extract_spans(col("html")))
+      .collect().foreach { r =>
+        val got = r.getSeq[org.apache.spark.sql.Row](1)
+          .map(s => (s.getString(0), s.getString(1), s.getString(2), s.getInt(3)))
+        val want = engine.extractString(r.getString(0)).spans
+          .map(s => (s.kind, s.text, s.media_ref, s.offset))
+        assert(got == want)
+      }
+    // NULL in, NULL out
+    val nulls = spark.createDataFrame(Seq((2L, null: String))).toDF("id", "html")
+      .select(ExtractSpans.extract_spans(col("html"))).collect()
+    assert(nulls.length == 1 && nulls(0).isNullAt(0))
+    assert(spark.sql("select extract_spans(cast(null as string))").head().isNullAt(0))
   }
 
   test("size-balanced extraction spreads giant documents across tasks") {
@@ -1535,7 +1565,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val skewed = InterleavedGen.table(spark, sf).coalesce(1)
       assert(skewed.rdd.getNumPartitions == 1)
-      val balanced = ExtractPipeline.extractBalanced(skewed, partitions = 8)
+      val balanced = ExtractPipeline.extractSizeBalanced(skewed, Long.MaxValue, minPartitions = 8)
       val sizes = balanced.toDF().groupBy(spark_partition_id()).count().collect().map(_.getLong(1))
       assert(sizes.length == 8, sizes.mkString(","))
       assert(sizes.min > 30, s"unbalanced: ${sizes.mkString(",")}") // ~62 expected per partition
